@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.api.RunContext
 import graft.config.TransformConfig
 import graft.runtime.Registries
+import graft.streaming.StreamingExecutor
 
 /**
  * Driver contract: one `queries` entry per implemented operator from
@@ -30,231 +31,136 @@ import graft.runtime.Registries
  */
 object SparkEntry {
   private val transforms = Registries.transforms()
-  /** Streaming-input staging dirs, memoized per source dir (q32/q46): test
+
+  /** `df` written once per `key` as a parquet store (see [[Scaffold.once]]). */
+  private def stored(key: String)(df: => DataFrame): String =
+    Scaffold.once(key)(df.write.mode("overwrite").parquet(_))
+
+  /** Streaming-input staging dir for the q32/q46/q68/q73/q83 drains: test
     * scaffolding only — real deployments stream already-landed files. */
-  private val q32InputDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedEventsDir(s: SparkSession, dir: String): String =
-    q32InputDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory("q32in").toString
+    Scaffold.once(s"q32in#$dir") { out =>
       // landed partitioned by event_type — the standard landing layout for
       // typed event streams, and what lets a per-type consumer (q73's
       // click/purchase sides) partition-prune instead of scanning every
       // type's files on every micro-batch. coalesce(2) keeps the per-type
       // file count low: the file source re-lists this dir once per
       // micro-batch AND per bench pass.
-      tab(s, d, "events").coalesce(2).write.mode("overwrite")
-        .partitionBy("event_type").parquet(tmp)
-      tmp
-    })
+      tab(s, dir, "events").coalesce(2).write.mode("overwrite")
+        .partitionBy("event_type").parquet(out)
+    }
 
-  /** Persisted MinHash signature store for q117, memoized per source dir:
-    * run-N scaffolding (the store normally comes from yesterday's
-    * minhash_signatures pipeline) — q117 itself reads ONLY this parquet,
-    * never the reference text. */
-  private val q117StoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Persisted MinHash signature store for q117: run-N scaffolding (the
+    * store normally comes from yesterday's minhash_signatures pipeline) —
+    * q117 itself reads ONLY this parquet, never the reference text. */
   private def stagedSignatureStore(s: SparkSession, dir: String): String =
-    q117StoreDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory("q117sig").toString
-      graft.dedup.Dedup.minhashSignatures(
-          tab(s, d, "documents").where("doc_id < 100"), "doc_id", "text")
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    stored(s"q117sig#$dir")(graft.dedup.Dedup.minhashSignatures(
+      tab(s, dir, "documents").where("doc_id < 100"), "doc_id", "text"))
 
-  /** Persisted gram-hash store for q124, memoized per source dir: run-N
-    * scaffolding (the store normally comes from yesterday's
-    * gram_signatures pipeline) — q124 itself reads ONLY this parquet,
-    * never the reference text. */
-  private val q124StoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Persisted gram-hash store for q124: run-N scaffolding (the store
+    * normally comes from yesterday's gram_signatures pipeline) — q124
+    * itself reads ONLY this parquet, never the reference text. */
   private def stagedGramStore(s: SparkSession, dir: String): String =
-    q124StoreDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory("q124gram").toString
-      graft.dedup.SpanDedup.gramSignatures(
-          tab(s, d, "documents").where("doc_id < 250"), "text")
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    stored(s"q124gram#$dir")(graft.dedup.SpanDedup.gramSignatures(
+      tab(s, dir, "documents").where("doc_id < 250"), "text"))
 
-  /** Persisted BPE merges store for q131/q132, memoized per source dir:
-    * run-N scaffolding (the store normally comes from yesterday's
-    * bpe_train pipeline) — the consumers read ONLY this parquet, never
-    * re-train. Built through the registry transform so the library path
-    * is what's exercised. */
-  private val bpeStoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Persisted BPE merges store for q131/q132: run-N scaffolding (the
+    * store normally comes from yesterday's bpe_train pipeline) — the
+    * consumers read ONLY this parquet, never re-train. Built through the
+    * registry transform so the library path is what's exercised. */
   private def stagedBpeStore(s: SparkSession, dir: String): String =
-    bpeStoreDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory("bpemerges").toString
-      ap(tab(s, d, "documents"),
-        t("bpe_train", "textColumn" -> "text", "numMerges" -> "300"))
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    stored(s"bpemerges#$dir")(ap(tab(s, dir, "documents"),
+      t("bpe_train", "textColumn" -> "text", "numMerges" -> "300")))
 
-  /** Persisted line-hash store for q140, memoized per source dir: run-N
-    * scaffolding (the store normally comes from yesterday's
-    * `line_signatures` pipeline over the ingested corpus) — q140 drops
-    * history's lines reading ONLY this parquet, never reference text. */
-  private val lineStoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Persisted line-hash store for q140: run-N scaffolding (the store
+    * normally comes from yesterday's `line_signatures` pipeline over the
+    * ingested corpus) — q140 drops history's lines reading ONLY this
+    * parquet, never reference text. */
   private def stagedLineStore(s: SparkSession, dir: String): String =
-    lineStoreDirs.computeIfAbsent(dir, { d =>
+    stored(s"linestore#$dir") {
       import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("linestore").toString
-      ap(relined(s, d).where(col("doc_id") < 100),
+      ap(relined(s, dir).where(col("doc_id") < 100),
         t("line_signatures", "textColumn" -> "text"))
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    }
 
   /** BPE merges store trained on a DISJOINT planted alphabet (Greek) for
     * q133: none of its merges can fire on the ASCII corpus, so encoding
     * provably degenerates to one token per code point + one `</w>` per
     * word — arithmetic DuckDB re-derives exactly. One global store (its
     * content never depends on the source dir). */
-  private val bpeDisjointStoreDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedBpeDisjointStore(s: SparkSession): String =
-    bpeDisjointStoreDir.computeIfAbsent("global", { _ =>
-      import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("bpemerges0").toString
-      val planted = Seq.fill(4)(Seq("αβ", "αβγ", "γβα").mkString(" "))
-      ap(planted.toDF("text"),
-        t("bpe_train", "textColumn" -> "text", "numMerges" -> "8",
-          "minCount" -> "2"))
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    stored("bpemerges0")(ap(plantedGreek(s),
+      t("bpe_train", "textColumn" -> "text", "numMerges" -> "8",
+        "minCount" -> "2")))
 
   /** The q133 planted store retrained with byteFallback for q143: every
     * codepoint of the ASCII corpus is OUTSIDE its Greek alphabet, so the
     * encode provably takes the byte path for all of them — the
     * train-on-A / encode-on-B pattern with ZERO `<unk>` and an exact
     * detokenize roundtrip (the cross-corpus safety property). */
-  private val bpeFallbackStoreDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedBpeFallbackStore(s: SparkSession): String =
-    bpeFallbackStoreDir.computeIfAbsent("global", { _ =>
-      import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("bpemergesbf").toString
-      val planted = Seq.fill(4)(Seq("αβ", "αβγ", "γβα").mkString(" "))
-      ap(planted.toDF("text"),
-        t("bpe_train", "textColumn" -> "text", "numMerges" -> "8",
-          "minCount" -> "2", "byteFallback" -> "true"))
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    stored("bpemergesbf")(ap(plantedGreek(s),
+      t("bpe_train", "textColumn" -> "text", "numMerges" -> "8",
+        "minCount" -> "2", "byteFallback" -> "true")))
 
-  /** Persisted k-means codebook store for q125, memoized per source dir:
-    * run-N scaffolding (the store normally comes from yesterday's
-    * `codebook` pipeline) — q125 itself trains NOTHING and pays no
-    * sampling scan; its cluster assignment reads ONLY this parquet. */
-  private val q125StoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The q133/q143 planted Greek training text. */
+  private def plantedGreek(s: SparkSession): DataFrame = {
+    import s.implicits._
+    Seq.fill(4)(Seq("αβ", "αβγ", "γβα").mkString(" ")).toDF("text")
+  }
+
+  /** Persisted k-means codebook store for q125: run-N scaffolding (the
+    * store normally comes from yesterday's `codebook` pipeline) — q125
+    * itself trains NOTHING and pays no sampling scan; its cluster
+    * assignment reads ONLY this parquet. */
   private def stagedCodebookStore(s: SparkSession, dir: String): String =
-    q125StoreDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory("q125cb").toString
-      graft.ann.Ann.codebookFrame(plantedFamilies(s, d), "vec_id", "embedding",
-          nLists = 40, kmeansIters = 2)
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    stored(s"q125cb#$dir")(graft.ann.Ann.codebookFrame(plantedFamilies(s, dir),
+      "vec_id", "embedding", nLists = 40, kmeansIters = 2))
 
   /** Persisted IVF codebook for q127 over the twin-augmented embedding
-    * corpus, memoized per source dir — q127's ANN search trains nothing
-    * and probes against ONLY this parquet. */
-  private val q127StoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * corpus — q127's ANN search trains nothing and probes against ONLY
+    * this parquet. */
   private def stagedAnnCodebookStore(s: SparkSession, dir: String): String =
-    q127StoreDirs.computeIfAbsent(dir, { d =>
-      import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("q127cb").toString
-      val emb = tab(s, d, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      graft.ann.Ann.codebookFrame(emb.unionByName(twins), "vec_id", "embedding",
-          nLists = 64, kmeansIters = 0)
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    stored(s"q127cb#$dir")(graft.ann.Ann.codebookFrame(
+      twinCorpus(tab(s, dir, "embeddings")), "vec_id", "embedding",
+      nLists = 64, kmeansIters = 0))
 
   /** Persisted PQ codebook store for q170 over the twin-augmented
-    * embedding corpus, memoized per source dir — q170's retrieval trains
-    * nothing and encodes against ONLY this parquet. */
-  private val q170StoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * embedding corpus — q170's retrieval trains nothing and encodes
+    * against ONLY this parquet. */
   private def stagedPqCodebookStore(s: SparkSession, dir: String): String =
-    q170StoreDirs.computeIfAbsent(dir, { d =>
-      import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("q170pq").toString
-      val emb = tab(s, d, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      graft.ann.Ann.pqCodebookFrame(emb.unionByName(twins), "vec_id",
-          "embedding", m = 8, k = 256, kmeansIters = 2)
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    stored(s"q170pq#$dir")(graft.ann.Ann.pqCodebookFrame(
+      twinCorpus(tab(s, dir, "embeddings")), "vec_id", "embedding",
+      m = 8, k = 256, kmeansIters = 2))
 
   /** q174's staged PQ CODES store — the corpus of q169/q170, encoded
     * ONCE against the q170 codebook store ([[graft.ann.Ann.pqCodesFrame]]
     * via the pq_encode transform) and persisted; q174's retrieval then
     * trains nothing AND encodes nothing. */
-  private val q174CodesDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedPqCodesStore(s: SparkSession, dir: String): String =
-    q174CodesDirs.computeIfAbsent(dir, { d =>
-      import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("q174codes").toString
-      val emb = tab(s, d, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
+    stored(s"q174codes#$dir") {
       val cbs = graft.ann.Ann.loadPqCodebooks(
-        s.read.parquet(stagedPqCodebookStore(s, d)))
-      graft.ann.Ann.pqCodesFrame(emb.unionByName(twins), "vec_id",
-          "embedding", cbs)
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+        s.read.parquet(stagedPqCodebookStore(s, dir)))
+      graft.ann.Ann.pqCodesFrame(twinCorpus(tab(s, dir, "embeddings")),
+        "vec_id", "embedding", cbs)
+    }
 
   /** q175's staged IVFADC CODES store — q174's statement for the
     * composed quantizer. */
-  private val q175CodesDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedIvfPqCodesStore(s: SparkSession, dir: String): String =
-    q175CodesDirs.computeIfAbsent(dir, { d =>
-      import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("q175codes").toString
-      val emb = tab(s, d, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
+    stored(s"q175codes#$dir") {
       val (cents, cbs) = graft.ann.Ann.loadIvfPqStore(
-        s.read.parquet(stagedIvfPqStore(s, d)))
-      graft.ann.Ann.ivfPqCodesFrame(emb.unionByName(twins), "vec_id",
-          "embedding", cents, cbs)
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+        s.read.parquet(stagedIvfPqStore(s, dir)))
+      graft.ann.Ann.ivfPqCodesFrame(twinCorpus(tab(s, dir, "embeddings")),
+        "vec_id", "embedding", cents, cbs)
+    }
 
-  /** q172's staged COMBINED IVFADC store — the q170 memoization for
+  /** q172's staged COMBINED IVFADC store — the q170 store for
     * [[graft.ann.Ann.ivfPqStoreFrame]]. */
-  private val q172StoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedIvfPqStore(s: SparkSession, dir: String): String =
-    q172StoreDirs.computeIfAbsent(dir, { d =>
-      import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("q172ivfpq").toString
-      val emb = tab(s, d, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      graft.ann.Ann.ivfPqStoreFrame(emb.unionByName(twins), "vec_id",
-          "embedding", nLists = 16, m = 8, nCentroids = 256, kmeansIters = 2)
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    stored(s"q172ivfpq#$dir")(graft.ann.Ann.ivfPqStoreFrame(
+      twinCorpus(tab(s, dir, "embeddings")), "vec_id", "embedding",
+      nLists = 16, m = 8, nCentroids = 256, kmeansIters = 2))
 
   /** The q118/q119/q125 planted corpus: 40 ids carrying 4 orthogonal
     * one-hot families (vec_id % 4) — the construction whose clustering
@@ -267,11 +173,22 @@ object SparkEntry {
           "THEN 1.0 ELSE 0.0 END AS FLOAT))").as("embedding"))
   }
 
-  /** Drain a streaming frame into a memory table (append, availableNow):
-    * unique query name, temp checkpoint, state-store partition count
-    * scoped to the query and restored after. awaitTermination's result is
-    * CHECKED — a timed-out drain means a partially-filled memory sink, so
-    * refuse it loudly instead of returning wrong rows. */
+  /** The planted-twin ANN corpus (q115/q116/q127/q169–q175): the
+    * embeddings `emb` plus an identical copy of vec_id 0..4 at
+    * vec_id + 2000000, so every [[annQueries]] row has an exact twin. */
+  private def twinCorpus(emb: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    emb.unionByName(emb.where("vec_id < 5")
+      .withColumn("vec_id", col("vec_id") + 2000000L))
+  }
+
+  /** The ANN query set: vec_id 0..4 of `emb` as (query_id, embedding). */
+  private def annQueries(emb: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    emb.where("vec_id < 5")
+      .select(col("vec_id").as("query_id"), col("embedding"))
+  }
+
   /** State partitions for the bench/verify streaming drains: enough to
     * parallelize the stateful compute, few enough that per-store
     * fixed cost (a delta file written+fsynced EVERY micro-batch; a
@@ -296,83 +213,55 @@ object SparkEntry {
   private def streamStateParts(s: SparkSession): Int =
     math.min(s.sparkContext.defaultParallelism, 8).max(2)
 
-  /** Throwaway checkpoint dir for the verify/bench streaming drains:
-    * memory-backed (/dev/shm) when the host offers it — the state store
-    * fsyncs a delta file per partition per micro-batch, which on a
-    * DISCARDED checkpoint is pure fixed overhead (measured ~25% of the
-    * quartet's wall-clock on this box's ext4 /tmp). Production pipelines
-    * configure a durable location via StreamingConfig.checkpointLocation;
-    * this helper is bench scaffolding only. */
-  private def tmpCheckpointDir(prefix: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, prefix).toString
-    else java.nio.file.Files.createTempDirectory(prefix).toString
-  }
-
-  private def runStreamToTable(s: SparkSession, df: DataFrame, prefix: String,
-                               statePartitions: Int = 0,
-                               noDataBatch: Boolean = true): DataFrame = {
-    val stateParts =
-      if (statePartitions > 0) statePartitions else streamStateParts(s)
-    //
-    // noDataBatch=false skips the trailing empty micro-batch (~1 s of
-    // machinery here). Only sound for operators that emit on ARRIVAL —
-    // stream-stream inner join, dropDuplicates — where the final batch
-    // exists purely to expire state. Append-mode aggregations/sessions
-    // emit IN that final batch (watermark must pass the window end), so
-    // they keep the default.
-    val qn = prefix + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+  /** Drain one streaming query to its memory table `<name>_out` and return
+    * the table. `start` is given a fresh checkpoint dir and starts the
+    * query (append output, availableNow trigger — [[toMemory]] for a bare
+    * frame, StreamingExecutor for a pipeline config); the checkpoint is
+    * removed once the query has terminated, and the fixed table name
+    * means a re-run replaces its table instead of leaking one per pass.
+    * The state partition count ([[streamStateParts]]) and `noDataBatch`
+    * are scoped to the drain and restored after. noDataBatch=false skips
+    * the trailing empty micro-batch (~1 s of machinery here): only sound
+    * for operators that emit on ARRIVAL — stream-stream inner join,
+    * dropDuplicates — where the final batch exists purely to expire
+    * state; append-mode aggregations/sessions emit IN that final batch
+    * (watermark must pass the window end), so they keep the default.
+    * awaitTermination's result is CHECKED — a timed-out drain means a
+    * partially-filled memory sink, so refuse it loudly instead of
+    * returning wrong rows. NOTE the session-global conf toggles mean
+    * SparkEntry queries are SEQUENTIAL-only by contract (Bench/Verify
+    * honor this): a drain started concurrently inside another drain's
+    * conf window would clone the wrong settings. */
+  private def drain(s: SparkSession, name: String, noDataBatch: Boolean = true)(
+      start: String => org.apache.spark.sql.streaming.StreamingQuery): DataFrame = {
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    s.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
+    s.conf.set("spark.sql.shuffle.partitions", streamStateParts(s).toString)
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatch.toString)
+    val checkpoint = Scaffold.fresh(name + "ck")
     try {
-      val q = df.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .option("checkpointLocation",
-          tmpCheckpointDir(prefix + "ck"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(120000)) {
-        q.stop()
-        throw new IllegalStateException(
-          s"$prefix: streaming drain exceeded 120s — refusing partial results")
-      }
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-    }
-    s.table(qn)
-  }
-
-  /** Drain a StreamingExecutor pipeline config to its memory sink and
-    * return the table — the executor-path twin of [[runStreamToTable]]
-    * (shared: conf save/restore, 120 s refuse-partial-results bound).
-    * NOTE the session-global conf toggles mean SparkEntry queries are
-    * SEQUENTIAL-only by contract (Bench/Verify honor this): a drain
-    * started concurrently inside another drain's conf window would clone
-    * the wrong settings. `noDataBatch=false` is only sound for
-    * emit-on-arrival operators (dedup, stream-stream inner join). */
-  private def drainExecutor(s: SparkSession, cfg: graft.config.PipelineConfig,
-                            name: String, queryName: String,
-                            noDataBatch: Boolean = true): DataFrame = {
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatch.toString)
-    try {
-      val q = new graft.streaming.StreamingExecutor().start(cfg)(s)
+      val q = start(checkpoint)
       if (!q.awaitTermination(120000)) {
         q.stop()
         throw new IllegalStateException(
           s"$name: streaming drain exceeded 120s — refusing partial results")
       }
     } finally { // batch queries follow
+      Scaffold.delete(checkpoint)
       s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
     }
-    s.table(queryName)
+    s.table(name + "_out")
   }
+
+  /** Start `df` as [[drain]] `name`'s memory-sink query. */
+  private def toMemory(df: DataFrame, name: String)(
+      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    df.writeStream.format("memory").queryName(name + "_out")
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
 
   /** 8-word re-lining of the documents table: replace every 8th space
     * with a newline — byte-identical to the transform/slice HOF form on
@@ -408,36 +297,7 @@ object SparkEntry {
     TransformConfig(s"$typ-q", typ, opts.toMap)
   private def ap(df: DataFrame, tc: TransformConfig): DataFrame =
     transforms.get(tc.transformType).apply(df, tc, ctx(df.sparkSession))
-  /** Read a testdata table. The events table's `ts` encoding has DRIFTED
-    * across testdata generations — TIMESTAMP(NANOS) (which Spark 4 rejects
-    * unless read as raw longs via the legacy conf) vs plain timestamp[us]
-    * (which reads as TIMESTAMP_NTZ) — so branch on the LOADED dtype rather
-    * than assuming either:
-    *  - LongType  → nanos-as-long legacy read; truncate to micros
-    *    (matching DuckDB's ns→us cast semantics in the oracles);
-    *  - TIMESTAMP_NTZ → cast to session-zone TimestampType (session TZ is
-    *    UTC everywhere, so the wall-clock is preserved, matching DuckDB's
-    *    naive TIMESTAMP);
-    *  - TimestampType → already what we want;
-    *  - anything else → a descriptive error naming table/column/type, so
-    *    the NEXT testdata drift produces a diagnosable message instead of
-    *    a downstream Catalyst DATATYPE_MISMATCH. */
-  /** Multi-row-group staged copies of the testdata tables, memoized per
-    * (source dir, table) for the life of the JVM — run-N scaffolding
-    * built INSIDE the run (bench warmup / first use), never persisted
-    * across runs. The generated sf* parquet inputs are ONE row group per
-    * table, so every scan plans exactly one task and the per-row compute
-    * of a whole query tree runs on one core no matter how many the
-    * session has — the round-17 scaling gate measured 8 vs 32 cores
-    * indistinguishable across all 177 queries for exactly this reason.
-    * At production scale inputs arrive as thousands of row groups; the
-    * staged copy reproduces that layout at test scale (guide §6 input
-    * split sizing: file count `SPARK_GRAFT_STAGED_PARTS`, default 32 =
-    * one file per core at the driver's high core count; Spark's
-    * size+openCost split packing then yields ~minPartitionNum splits at
-    * EITHER core count automatically). Same rows, same schema — every
-    * query is row-order-independent, which the DuckDB oracle re-checks
-    * end to end at sf0.001/sf0.01 where this staging is equally active. */
+
   /** Per-table staged file counts, chosen from the measured tradeoff at
     * sf0.1: scan-task parallelism speeds the CPU-heavy per-row walks
     * (documents: BPE/minhash/media/curation; lineitem: the decimal agg
@@ -456,32 +316,54 @@ object SparkEntry {
   private def stagedParts(name: String): Int =
     sys.env.get("SPARK_GRAFT_STAGED_PARTS").map(_.toInt.max(1))
       .getOrElse(stagedTabPartsDefault.getOrElse(name, 1))
-  private val stagedTabDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** Multi-row-group staged copies of the testdata tables, one per
+    * (source dir, table) — run-N scaffolding built INSIDE the run (bench
+    * warmup / first use) under [[Scaffold]]. The generated sf* parquet
+    * inputs are ONE row group per table, so every scan plans exactly one
+    * task and the per-row compute
+    * of a whole query tree runs on one core no matter how many the
+    * session has — the round-17 scaling gate measured 8 vs 32 cores
+    * indistinguishable across all 177 queries for exactly this reason.
+    * At production scale inputs arrive as thousands of row groups; the
+    * staged copy reproduces that layout at test scale (guide §6 input
+    * split sizing: file count `SPARK_GRAFT_STAGED_PARTS`, default 32 =
+    * one file per core at the driver's high core count; Spark's
+    * size+openCost split packing then yields ~minPartitionNum splits at
+    * EITHER core count automatically). Same rows, same schema — every
+    * query is row-order-independent, which the DuckDB oracle re-checks
+    * end to end at sf0.001/sf0.01 where this staging is equally active. */
   private def tab(s: SparkSession, dir: String, name: String): DataFrame =
     if (stagedParts(name) <= 1) rawTab(s, dir, name)
     else s.read.parquet(stagedPath(s, dir, name))
 
   /** The staged dir itself — for the YAML pipelines (q154/q158/q22/q135)
     * whose file source reads the corpus path directly rather than through
-    * [[tab]]: same rows, production-shaped file layout. Unstaged tables
-    * resolve to the raw path (only valid for non-events tables — events'
-    * ts normalization lives in [[rawTab]]). */
-  private def stagedPath(s: SparkSession, dir: String, name: String): String = {
-    val parts = stagedParts(name)
-    if (parts <= 1) {
-      require(name != "events",
-        "stagedPath: events cannot resolve to the raw path (ts normalization)")
-      s"$dir/$name.parquet"
-    } else stagedTabDirs.computeIfAbsent(s"$dir#$name", { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"graftin_$name").toString
-      rawTab(s, dir, name).repartition(parts)
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    * [[tab]]: same rows, production-shaped file layout, `parts` files.
+    * An unstaged table (parts 1) resolves to the raw path, except events:
+    * its ts normalization lives in [[rawTab]], so a path reader gets a
+    * single-file normalized copy instead. */
+  private[graft] def stagedPath(s: SparkSession, dir: String, name: String,
+                                parts: Int = 0): String = {
+    val n = if (parts > 0) parts else stagedParts(name)
+    if (n <= 1 && name != "events") s"$dir/$name.parquet"
+    else stored(s"graftin_$name#$dir#$n")(rawTab(s, dir, name).repartition(n))
   }
 
+  /** Read a testdata table. The events table's `ts` encoding has DRIFTED
+    * across testdata generations — TIMESTAMP(NANOS) (which Spark 4 rejects
+    * unless read as raw longs via the legacy conf) vs plain timestamp[us]
+    * (which reads as TIMESTAMP_NTZ) — so branch on the LOADED dtype rather
+    * than assuming either:
+    *  - LongType  → nanos-as-long legacy read; truncate to micros
+    *    (matching DuckDB's ns→us cast semantics in the oracles);
+    *  - TIMESTAMP_NTZ → cast to session-zone TimestampType (session TZ is
+    *    UTC everywhere, so the wall-clock is preserved, matching DuckDB's
+    *    naive TIMESTAMP);
+    *  - TimestampType → already what we want;
+    *  - anything else → a descriptive error naming table/column/type, so
+    *    the NEXT testdata drift produces a diagnosable message instead of
+    *    a downstream Catalyst DATATYPE_MISMATCH. */
   private def rawTab(s: SparkSession, dir: String, name: String): DataFrame = {
     // Harmless when ts is not NANOS; required for the legacy-nanos files.
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -1427,17 +1309,13 @@ object SparkEntry {
 
     // ---- LLM-data-pipeline: similarity search over embeddings ----
     "q28_ann_topk" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val queries = emb.where("vec_id < 5")
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = annQueries(emb)
       graft.ann.Ann.bruteForceTopK(emb, queries, "vec_id", "embedding", "query_id", 10)
     }),
     "q29_ann_lsh" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val queries = emb.where("vec_id < 5")
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = annQueries(emb)
       graft.ann.Ann.lshTopK(emb, queries, "vec_id", "embedding", "query_id", 10,
         bits = 8, tables = 6)
     }),
@@ -1448,21 +1326,15 @@ object SparkEntry {
     // ranks 1..2 are exactly (self, twin) for every query (max non-self
     // cosine in this corpus is ≈0.4, nowhere near the tie)
     "q115_ann_lsh_exact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      val queries = emb.where("vec_id < 5")
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      graft.ann.Ann.lshTopK(emb.unionByName(twins), queries,
+      val queries = annQueries(emb)
+      graft.ann.Ann.lshTopK(twinCorpus(emb), queries,
         "vec_id", "embedding", "query_id", 2, bits = 8, tables = 6)
         .select("query_id", "vec_id", "rank")
     }),
     "q33_ann_ivf" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val queries = emb.where("vec_id < 5")
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = annQueries(emb)
       graft.ann.Ann.ivfTopK(emb, queries, "vec_id", "embedding", "query_id", 10,
         nLists = 64, nProbe = 8)
     }),
@@ -1471,13 +1343,9 @@ object SparkEntry {
     // twin are guaranteed candidates, tied at the float-max sim, vec_id
     // tie-break → ranks 1..2 = (self, twin) exactly
     "q116_ann_ivf_exact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      val queries = emb.where("vec_id < 5")
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      graft.ann.Ann.ivfTopK(emb.unionByName(twins), queries,
+      val queries = annQueries(emb)
+      graft.ann.Ann.ivfTopK(twinCorpus(emb), queries,
         "vec_id", "embedding", "query_id", 2, nLists = 64, nProbe = 8)
         .select("query_id", "vec_id", "rank")
     }),
@@ -1487,14 +1355,9 @@ object SparkEntry {
     // ranks 1..2 = (self, twin) exactly — while the transform resolves
     // queries + codebook from registered views like a real YAML pipeline
     "q127_ann_transform_exact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      val corpus = emb.unionByName(twins)
-      emb.where("vec_id < 5")
-        .select(col("vec_id").as("query_id"), col("embedding"))
-        .createOrReplaceTempView("q127_queries")
+      val corpus = twinCorpus(emb)
+      annQueries(emb).createOrReplaceTempView("q127_queries")
       s.read.parquet(stagedAnnCodebookStore(s, dir))
         .createOrReplaceTempView("q127_codebook")
       ap(corpus, t("ann_topk",
@@ -2105,13 +1968,9 @@ object SparkEntry {
     // at cosine 1.0, with q30's planted-corpus fact (max natural pair
     // cosine ≈ 0.51) excluding everything else
     "q169_ann_pq_exact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      val queries = emb.where("vec_id < 5")
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      graft.ann.Ann.pqTopK(emb.unionByName(twins), queries,
+      val queries = annQueries(emb)
+      graft.ann.Ann.pqTopK(twinCorpus(emb), queries,
         "vec_id", "embedding", "query_id", 2,
         m = 8, nCentroids = 256, kmeansIters = 2, candidateFactor = 8)
         .select("query_id", "vec_id", "rank")
@@ -2123,14 +1982,9 @@ object SparkEntry {
     // attain the global-minimum ADC under ANY codebook, exact re-rank
     // orders (self, twin)
     "q170_ann_pq_store_exact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      val corpus = emb.unionByName(twins)
-      emb.where("vec_id < 5")
-        .select(col("vec_id").as("query_id"), col("embedding"))
-        .createOrReplaceTempView("q170_queries")
+      val corpus = twinCorpus(emb)
+      annQueries(emb).createOrReplaceTempView("q170_queries")
       s.read.parquet(stagedPqCodebookStore(s, dir))
         .createOrReplaceTempView("q170_codebook")
       ap(corpus, t("ann_topk",
@@ -2149,14 +2003,9 @@ object SparkEntry {
     // it was encoded under exactly this codebook; the twin statement is
     // q169's
     "q174_ann_pq_codes_exact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      val corpus = emb.unionByName(twins)
-      emb.where("vec_id < 5")
-        .select(col("vec_id").as("query_id"), col("embedding"))
-        .createOrReplaceTempView("q174_queries")
+      val corpus = twinCorpus(emb)
+      annQueries(emb).createOrReplaceTempView("q174_queries")
       s.read.parquet(stagedPqCodebookStore(s, dir))
         .createOrReplaceTempView("q174_codebook")
       s.read.parquet(stagedPqCodesStore(s, dir))
@@ -2177,13 +2026,9 @@ object SparkEntry {
     // attains the global-minimum ADC within the probed set; exact cosine
     // re-rank orders (self, twin) as ranks 1..2 like q169
     "q171_ann_ivfpq_exact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      val queries = emb.where("vec_id < 5")
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      graft.ann.Ann.ivfPqTopK(emb.unionByName(twins), queries,
+      val queries = annQueries(emb)
+      graft.ann.Ann.ivfPqTopK(twinCorpus(emb), queries,
         "vec_id", "embedding", "query_id", 2,
         nLists = 16, nProbe = 4, m = 8, nCentroids = 256, kmeansIters = 2,
         candidateFactor = 8)
@@ -2193,14 +2038,9 @@ object SparkEntry {
     // COMBINED store (coarse centroids + residual codebooks, one
     // ivfpq_* stamp family): the run trains nothing
     "q172_ann_ivfpq_store_exact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      val corpus = emb.unionByName(twins)
-      emb.where("vec_id < 5")
-        .select(col("vec_id").as("query_id"), col("embedding"))
-        .createOrReplaceTempView("q172_queries")
+      val corpus = twinCorpus(emb)
+      annQueries(emb).createOrReplaceTempView("q172_queries")
       s.read.parquet(stagedIvfPqStore(s, dir))
         .createOrReplaceTempView("q172_codebook")
       ap(corpus, t("ann_topk",
@@ -2215,14 +2055,9 @@ object SparkEntry {
     // store (ivfpq_encode output, both-halves fingerprint) — trains
     // nothing, encodes nothing; q171's twin statement
     "q175_ann_ivfpq_codes_exact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      val corpus = emb.unionByName(twins)
-      emb.where("vec_id < 5")
-        .select(col("vec_id").as("query_id"), col("embedding"))
-        .createOrReplaceTempView("q175_queries")
+      val corpus = twinCorpus(emb)
+      annQueries(emb).createOrReplaceTempView("q175_queries")
       s.read.parquet(stagedIvfPqStore(s, dir))
         .createOrReplaceTempView("q175_codebook")
       s.read.parquet(stagedIvfPqCodesStore(s, dir))
@@ -2660,7 +2495,7 @@ object SparkEntry {
     }),
     // q113 through the PERSISTED line-hash store: the reference half
     // reduces ONCE to the stamped distinct-sha store parquet (built by the
-    // line_signatures transform, memoized like every other staged store)
+    // line_signatures transform, staged under Scaffold like every other store)
     // and the increment consumes it via signatureView — identical expected
     // output to q113, but this run never reads reference TEXT
     "q140_dedup_lines_store" -> ((s, dir) => {
@@ -2809,11 +2644,11 @@ object SparkEntry {
       // would OOM on an unbounded stream). The emitted set is deterministic:
       // windows with end <= max(event ts) - 1 hour — which the DuckDB
       // oracle expresses exactly.
-      // The staged input directory is memoized per source dir: it is test
+      // The staged input directory is built once per run: it is test
       // scaffolding (real deployments already have landed files), so only
       // the streaming query itself should be re-timed on repeat runs.
       val inDir = stagedEventsDir(s, dir)
-      val cfg = PipelineConfig(
+      def cfg(ck: String) = PipelineConfig(
         pipelineId = s"q32_${System.nanoTime()}",
         executionMode = ExecutionMode.MicroBatch,
         source = SourceConfig("file", Map(
@@ -2824,13 +2659,13 @@ object SparkEntry {
           "aggregations" -> "n_events:count(*),sum_value:round(sum(value), 2)"))),
         sink = SinkConfig("memory", Map("queryName" -> "q32_out")),
         streaming = Some(StreamingConfig(
-          checkpointLocation = Some(tmpCheckpointDir("q32ck")),
+          checkpointLocation = Some(ck),
           watermarkColumn = Some("ts"), watermarkDelay = Some("1 hour"),
           outputMode = "append",
           // ~3.4k distinct windows: 8 state stores, not 32 — each state
           // partition pays per-batch open/commit overhead
           shufflePartitions = Some(streamStateParts(s)))))
-      drainExecutor(s, cfg, "q32", "q32_out")
+      drain(s, "q32")(ck => new StreamingExecutor().start(cfg(ck))(s))
     }),
 
     // arbitrary-state streaming: flatMapGroupsWithState sessionization with
@@ -2846,7 +2681,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions._
       import graft.config._
       val inDir = stagedEventsDir(s, dir)
-      val cfg = PipelineConfig(
+      def cfg(ck: String) = PipelineConfig(
         pipelineId = s"q46_${System.nanoTime()}",
         executionMode = ExecutionMode.MicroBatch,
         source = SourceConfig("file", Map(
@@ -2857,11 +2692,12 @@ object SparkEntry {
           "valueColumn" -> "value", "gap" -> "30 minutes"))),
         sink = SinkConfig("memory", Map("queryName" -> "q46_out")),
         streaming = Some(StreamingConfig(
-          checkpointLocation = Some(tmpCheckpointDir("q46ck")),
+          checkpointLocation = Some(ck),
           watermarkColumn = Some("ts"), watermarkDelay = Some("0 seconds"),
           outputMode = "append",
           shufflePartitions = Some(streamStateParts(s)))))
-      drainExecutor(s, cfg, "q46", "q46_out").select(col("user_id"),
+      drain(s, "q46")(ck => new StreamingExecutor().start(cfg(ck))(s))
+        .select(col("user_id"),
         unix_millis(col("session_start")).as("session_start_ms"),
         unix_millis(col("session_end")).as("session_end_ms"),
         col("n_events"),
@@ -2880,7 +2716,7 @@ object SparkEntry {
     "q83_stream_dedup" -> ((s, dir) => {
       import graft.config._
       val inDir = stagedEventsDir(s, dir)
-      val cfg = PipelineConfig(
+      def cfg(ck: String) = PipelineConfig(
         pipelineId = s"q83_${System.nanoTime()}",
         executionMode = ExecutionMode.MicroBatch,
         source = SourceConfig("file", Map(
@@ -2891,7 +2727,7 @@ object SparkEntry {
           "project" -> "true"))),
         sink = SinkConfig("memory", Map("queryName" -> "q83_out")),
         streaming = Some(StreamingConfig(
-          checkpointLocation = Some(tmpCheckpointDir("q83ck")),
+          checkpointLocation = Some(ck),
           watermarkColumn = Some("ts"), watermarkDelay = Some("365 days"),
           outputMode = "append",
           dedupColumns = Some("user_id,event_type"),
@@ -2899,7 +2735,8 @@ object SparkEntry {
       // dropDuplicates emits first-seen rows on ARRIVAL; the trailing
       // no-data batch would only expire seen-key state this drain never
       // revisits, so skip it (restored after — the agg queries need it)
-      drainExecutor(s, cfg, "q83", "q83_out", noDataBatch = false)
+      drain(s, "q83", noDataBatch = false)(ck =>
+        new StreamingExecutor().start(cfg(ck))(s))
     }),
 
     // stream-static join: the streaming enrich shape — events stream joined
@@ -2922,7 +2759,7 @@ object SparkEntry {
         .select(col("window.start").as("window_start"),
           col("window.end").as("window_end"),
           col("c_mktsegment"), col("n_events"), col("sum_value"))
-      runStreamToTable(s, agg, "q68_out")
+      drain(s, "q68")(toMemory(agg, "q68"))
     }),
 
     // stream-stream inner join: clicks correlated with same-user purchases
@@ -2956,7 +2793,7 @@ object SparkEntry {
           round(col("value"), 2).as("purchase_value"))
       // inner join emits matches on arrival; the trailing no-data batch
       // would only expire state this drain never revisits
-      runStreamToTable(s, joined, "q73_out", noDataBatch = false)
+      drain(s, "q73", noDataBatch = false)(toMemory(joined, "q73"))
     }),
 
     // ---------------- BPE tokenizer (train / store / encode) ----------

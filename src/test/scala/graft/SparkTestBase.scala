@@ -22,6 +22,7 @@ object TestSpark {
 
 abstract class SparkTestBase extends AnyFunSuite with Matchers {
   implicit lazy val spark: SparkSession = TestSpark.spark
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh scratch dir under the per-JVM [[Scaffold]] root, removed
+    * when the test JVM exits. */
+  def tmpDir(prefix: String): String = Scaffold.fresh(prefix)
 }

@@ -280,7 +280,7 @@ class GopherRulesSpec extends SparkTestBase {
     // parquet-backed input: a LocalRelation would be constant-folded by
     // ConvertToLocalRelation (legal now that the chain is deterministic),
     // leaving no plan to assert on
-    val tmp = java.nio.file.Files.createTempDirectory("gopherpush").toString
+    val tmp = tmpDir("gopherpush")
     Seq((1L, good), (2L, "too short"), (3L, null: String))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(tmp)
     val d = spark.read.parquet(tmp)
